@@ -42,6 +42,8 @@ only global op is the sketch merge on the driver.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -588,6 +590,24 @@ def load_boundaries(spark, path: str) -> dict[str, list[float]]:
     }
 
 
+def _ident(c: str) -> str:
+    """``c`` as a back-quoted SQL identifier."""
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _json_double(v: float) -> float | str:
+    """One split as Spark ML's ``DoubleParam`` JSON reads it: a finite
+    double as itself (``json`` writes its shortest round-trip repr, which
+    the JVM parses back bit for bit), a non-finite one as the string the
+    param reserves for it."""
+    v = float(v)
+    if v != v:
+        return "NaN"
+    if v in (float("inf"), float("-inf")):
+        return "Inf" if v > 0 else "-Inf"
+    return v
+
+
 def bucketize(
     df: DataFrame,
     boundaries: dict[str, list[float]],
@@ -608,38 +628,45 @@ def bucketize(
     Bucketizer sees it (handleInvalid='error' enforces that claim).
 
     Map-only stage: no shuffle, fully codegen'd, scales linearly.
-    """
-    from pyspark.ml.feature import Bucketizer
 
+    Driver cost is a fixed number of py4j commands per call plus a few
+    per column, whatever the boundary count: both projections are SQL
+    strings, and the splits cross to the JVM as one JSON string decoded
+    by the ``splitsArray`` param itself. The ``pyspark.ml`` wrapper would
+    send the nested Python list one split per command (about 4,800
+    commands for 20 columns x 101 boundaries).
+    """
     cols = list(boundaries)
-    splits_arr = [
-        [float("-inf")] + _interior_splits(boundaries[c]) + [float("inf")]
-        for c in cols
-    ]
+    keep = keep_cols if keep_cols is not None else []
+    norm_in = [f"__{c}_norm" for c in cols]
+    raw_out = [f"__{c}_bin_raw" for c in cols]
     # +0.0 canonicalizes -0.0 so the JVM's Double.compare total order
     # agrees with the kernels' IEEE comparison (see _interior_splits);
     # NaN/null -> +inf lands them in the last bucket (splits' top bucket
     # is upper-inclusive), matching np.searchsorted's NaN-at-end result
-    norm_in = [f"__{c}_norm" for c in cols]
-    normed = df.withColumns(
-        {
-            t: F.when(
-                F.col(c).isNull() | F.isnan(F.col(c)), F.lit(float("inf"))
-            ).otherwise(F.col(c) + F.lit(0.0))
+    normed = df.selectExpr(
+        "*",
+        *[
+            f"CASE WHEN {_ident(c)} IS NULL OR isnan({_ident(c)}) "
+            f"THEN CAST('Infinity' AS DOUBLE) ELSE {_ident(c)} + 0.0D END "
+            f"AS {_ident(t)}"
             for c, t in zip(cols, norm_in)
-        }
+        ],
     )
-    raw_out = [f"__{c}_bin_raw" for c in cols]
-    model = Bucketizer(
-        inputCols=norm_in, outputCols=raw_out, splitsArray=splits_arr,
-        handleInvalid="error",
+    splits = json.dumps([
+        ["-Inf", *map(_json_double, _interior_splits(boundaries[c])), "Inf"]
+        for c in cols
+    ])
+    model = df.sparkSession._jvm.org.apache.spark.ml.feature.Bucketizer()
+    model.setInputCols(model.inputCols().jsonDecode(json.dumps(norm_in)))
+    model.setOutputCols(model.outputCols().jsonDecode(json.dumps(raw_out)))
+    model.setSplitsArray(model.splitsArray().jsonDecode(splits))
+    model.setHandleInvalid("error")
+    binned = DataFrame(model.transform(normed._jdf), df.sparkSession)
+    return binned.selectExpr(
+        *[_ident(k) for k in keep],
+        *[f"CAST({_ident(r)} AS INT) AS {_ident(c + '_bin')}" for c, r in zip(cols, raw_out)],
     )
-    keep = keep_cols if keep_cols is not None else []
-    out = model.transform(normed).select(
-        *[F.col(k) for k in keep],
-        *[F.col(r).cast("int").alias(f"{c}_bin") for c, r in zip(cols, raw_out)],
-    )
-    return out
 
 
 def bucketize_pandas_udf(

@@ -14,9 +14,15 @@ etl_benchmark.py:27). We provide it properly:
    operator), dict codes for categoricals, epoch-day buckets for
    timestamps, passthrough for identifiers.
 
-Scale: the stats pass is one groupBy-free aggregate (count distinct via
-partial HLL or exact per column); the vocab join is broadcast (vocab is
-small by definition of "categorical"); everything else is map-only.
+Scale: the stats pass is a union of pruned single-column aggregates,
+and its few-int result comes back to the driver as a local relation.
+auto_tokenize collects every vocabulary (small by definition of
+categorical) in one aggregate job and applies them as literal map
+lookups in its output projection — operator fusion in the sense of
+pure-SQL inference pipelines — so the tokenized write is one map-only
+stage with no join and no window. Every projection is a SQL string:
+the driver's py4j traffic does not grow with boundary or vocabulary
+size.
 """
 
 from __future__ import annotations
@@ -25,35 +31,29 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import configure_for_oracle, load_table
+from .quantile_bin import _ident
 
 CATEGORICAL_MAX_DISTINCT_RATIO = 0.10
 CATEGORICAL_MAX_DISTINCT = 100
 
 
-def _class_expr():
-    """Classification decision tree as a column expression over the
-    per-column stats rows — identical CASE logic lives in the oracle."""
-    dr = F.col("n_distinct") / F.col("n_rows")
-    is_cat = (F.col("n_distinct") <= CATEGORICAL_MAX_DISTINCT) & (
-        dr <= CATEGORICAL_MAX_DISTINCT_RATIO
-    )
-    return (
-        F.when(F.col("spark_type") == "timestamp", F.lit("timestamp"))
-        .when(F.col("spark_type").startswith("array"), F.lit("vector"))
-        .when(
-            (F.col("spark_type") == "string") & (F.col("n_json") == F.col("n_rows")),
-            F.lit("json"),
-        )
-        .when((F.col("spark_type") == "string") & is_cat, F.lit("categorical"))
-        .when(F.col("spark_type") == "string", F.lit("text"))
-        .when(
-            F.col("spark_type").isin("bigint", "int") & F.col("is_key_name"),
-            F.lit("identifier"),
-        )
-        .when(F.col("spark_type").isin("bigint", "int") & is_cat, F.lit("numeric_discrete"))
-        .when(F.col("spark_type").isin("bigint", "int"), F.lit("identifier"))
-        .otherwise(F.lit("numeric_continuous"))
-    )
+_IS_CAT = (
+    f"(n_distinct <= {CATEGORICAL_MAX_DISTINCT} "
+    f"AND n_distinct / n_rows <= {CATEGORICAL_MAX_DISTINCT_RATIO}D)"
+)
+
+#: Classification decision tree over the per-column stats rows, as a
+#: Spark SQL expression — identical CASE logic lives in the oracle.
+_CLASS_SQL = f"""CASE
+  WHEN spark_type = 'timestamp' THEN 'timestamp'
+  WHEN spark_type LIKE 'array%' THEN 'vector'
+  WHEN spark_type = 'string' AND n_json = n_rows THEN 'json'
+  WHEN spark_type = 'string' AND {_IS_CAT} THEN 'categorical'
+  WHEN spark_type = 'string' THEN 'text'
+  WHEN spark_type IN ('bigint', 'int') AND is_key_name THEN 'identifier'
+  WHEN spark_type IN ('bigint', 'int') AND {_IS_CAT} THEN 'numeric_discrete'
+  WHEN spark_type IN ('bigint', 'int') THEN 'identifier'
+  ELSE 'numeric_continuous' END"""
 
 
 _STRATEGY = {
@@ -68,6 +68,11 @@ _STRATEGY = {
 }
 
 
+def _sql_str(v: str) -> str:
+    """``v`` as a Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _column_stats_union(
     df: DataFrame,
 ) -> tuple[list[tuple[str, str, bool]], DataFrame]:
@@ -77,7 +82,8 @@ def _column_stats_union(
     tests/test_plans.py::test_profiling_pass_prunes_columns_no_expand
     audits the exact plan object the real function runs — a regression
     back to the Expand/multi-countDistinct shape fails the pin even if
-    a hand-rebuilt twin would not."""
+    a hand-rebuilt twin would not. Each part is one SQL-string
+    projection, a few py4j commands per column."""
     from functools import reduce
 
     meta: list[tuple[str, str, bool]] = []
@@ -92,22 +98,23 @@ def _column_stats_union(
             t = "timestamp"
         is_key = c.endswith("key") or c.endswith("_id") or c == "doc_id"
         meta.append((c, t, is_key))
+        q = _ident(c)
         distinct = (
-            F.countDistinct(F.col(c))
+            f"count(DISTINCT {q})"
             if not t.startswith("array")
-            else F.countDistinct(F.col(c).cast("string"))
+            else f"count(DISTINCT CAST({q} AS STRING))"
         )
         n_json = (
-            F.count(F.when(F.col(c).rlike(r"^\{.*\}$"), 1)).cast("bigint")
+            f"count(CASE WHEN {q} RLIKE '^[{{].*[}}]$' THEN 1 END)"
             if t == "string"
-            else F.lit(0).cast("bigint")
+            else "0"
         )
         parts.append(
-            df.select(F.col(c)).agg(
-                F.lit(c).alias("__c"),
-                F.count(F.lit(1)).alias("__n"),
-                distinct.cast("bigint").alias("__nd"),
-                n_json.alias("__nj"),
+            df.selectExpr(
+                f"{_sql_str(c)} AS __c",
+                "count(1) AS __n",
+                f"CAST({distinct} AS BIGINT) AS __nd",
+                f"CAST({n_json} AS BIGINT) AS __nj",
             )
         )
     return meta, reduce(lambda a, b: a.unionAll(b), parts)
@@ -127,40 +134,30 @@ def infer_column_classes(spark: SparkSession, df: DataFrame, table: str) -> Data
     on the same fixture — and at 100 TB an Expand over the full row
     width is strictly worse than N pruned single-column scans of the
     same total bytes. Independent subtrees also schedule concurrently
-    inside the one job. The per-column rows (a few ints each) are
-    collected driver-side — KB of state, same output frame."""
+    inside the one job.
+
+    The per-column rows (a few ints each) come back to the driver and
+    return as an inline ``VALUES`` table, classified in the same SQL
+    statement: the optimizer folds the whole frame into one local
+    relation, so collecting it runs no Spark job."""
     meta, union = _column_stats_union(df)
     per_col = {r["__c"]: r for r in union.collect()}
-    stats = df.sparkSession.createDataFrame(
-        [
-            (
-                table,
-                c,
-                t,
-                per_col[c]["__n"],
-                per_col[c]["__nd"],
-                per_col[c]["__nj"],
-                is_key,
-            )
-            for c, t, is_key in meta
-        ],
-        "table_name string, column_name string, spark_type string, "
-        "n_rows bigint, n_distinct bigint, n_json bigint, is_key_name boolean",
+    rows = ",\n  ".join(
+        f"({_sql_str(table)}, {_sql_str(c)}, {_sql_str(t)}, {per_col[c]['__n']}L, "
+        f"{per_col[c]['__nd']}L, {per_col[c]['__nj']}L, {str(is_key).lower()})"
+        for c, t, is_key in meta
     )
-    cls = _class_expr().alias("inferred_class")
-    out = stats.select(
-        "table_name",
-        "column_name",
-        "spark_type",
-        "n_rows",
-        "n_distinct",
-        "n_json",
-        cls,
-    ).withColumn("strategy", F.element_at(
-        F.create_map(*[F.lit(x) for kv in _STRATEGY.items() for x in kv]),
-        F.col("inferred_class"),
-    ))
-    return out
+    strategy = ", ".join(f"'{k}', '{v}'" for k, v in _STRATEGY.items())
+    return df.sparkSession.sql(f"""
+SELECT table_name, column_name, spark_type, n_rows, n_distinct, n_json,
+  inferred_class, element_at(map({strategy}), inferred_class) AS strategy
+FROM (
+  SELECT *, {_CLASS_SQL} AS inferred_class
+  FROM VALUES
+  {rows}
+  AS stats(table_name, column_name, spark_type, n_rows, n_distinct, n_json,
+           is_key_name)
+)""")
 
 
 def q_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,6 +212,47 @@ def q_categorical_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dict_codes(df: DataFrame, cols: list[str]) -> dict[str, str]:
+    """Dense-rank codes for the dict-encoded ``cols``: 1-based over the
+    sorted distinct values, null first — the codes of ``dense_rank()
+    OVER (ORDER BY c)``. Returns one SQL projection per column.
+
+    One aggregate job collects every vocabulary, and each becomes a
+    literal map lookup inside the output projection, so the encoding
+    fuses into the same map-only stage as every other token.
+    infer_column_classes dict-encodes only string, int and bigint
+    columns with at most CATEGORICAL_MAX_DISTINCT values; a served
+    ``classes_df`` may mark a wider column (its map is as wide as its
+    vocabulary) but not a column of another type."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    for c in cols:
+        if types[c] not in ("string", "int", "bigint"):
+            raise ValueError(
+                "auto_tokenize dict-encodes string, int and bigint columns; "
+                f"{c!r} is {types[c]}"
+            )
+    if not cols:
+        return {}
+    aggs = []
+    for i, c in enumerate(cols):
+        q = _ident(c)
+        aggs += [f"sort_array(collect_set({q})) AS v{i}", f"bool_or({q} IS NULL) AS n{i}"]
+    row = df.selectExpr(*aggs).collect()[0]
+    codes: dict[str, str] = {}
+    for i, c in enumerate(cols):
+        vocab, has_null = row[f"v{i}"], bool(row[f"n{i}"])
+        q = _ident(c)
+        pairs = ", ".join(
+            f"{_sql_str(v) if types[c] == 'string' else f'CAST({v} AS {types[c]})'}, {code}"
+            for code, v in enumerate(vocab, 1 + has_null)
+        )
+        lookup = f"element_at(map({pairs}), {q})" if vocab else "CAST(NULL AS INT)"
+        if has_null:
+            lookup = f"CASE WHEN {q} IS NULL THEN 1 ELSE {lookup} END"
+        codes[c] = f"{lookup} AS {_ident(c + '_code')}"
+    return codes
+
+
 def auto_tokenize(
     spark: SparkSession,
     df: DataFrame,
@@ -251,50 +289,38 @@ def auto_tokenize(
 
     if classes_df is None:
         classes_df = infer_column_classes(spark, df, table)
+    # infer_column_classes returns a local relation: this collect runs
+    # no Spark job
     classes = {
         r["column_name"]: r["inferred_class"] for r in classes_df.collect()
     }
     cont = [c for c, k in classes.items() if k == "numeric_continuous"]
-    # Dict-encode categoricals via broadcast vocab joins, NOT a global
-    # dense_rank window: dense_rank over an unpartitioned ORDER BY
-    # funnels the whole fact table through one partition per encoded
-    # column. rank over the (tiny, by definition of categorical) sorted
-    # distinct vocabulary produces the identical 1-based codes, and the
-    # fact-side work is a broadcast hash join — map-only, scales.
-    for c, k in classes.items():
-        if k in ("categorical", "numeric_discrete"):
-            vocab = (
-                df.select(F.col(c).alias("__v")).distinct()
-                .select(
-                    F.col("__v"),
-                    F.dense_rank()
-                    .over(Window.orderBy(F.col("__v")))
-                    .cast("int")
-                    .alias(f"{c}_code"),
-                )
-            )
-            df = df.join(
-                F.broadcast(vocab), F.col(c).eqNullSafe(F.col("__v")), "left"
-            ).drop("__v")
+    # Dict codes are literal map lookups in the output projection (see
+    # _dict_codes), NOT a global dense_rank window — that funnels the
+    # whole fact table through one partition per encoded column — and
+    # not a vocabulary join either: the write stays one map-only stage.
+    codes = _dict_codes(
+        df, [c for c, k in classes.items() if k in ("categorical", "numeric_discrete")]
+    )
     out_cols = []
     for c, k in classes.items():
+        q = _ident(c)
         if k == "identifier":
-            out_cols.append(F.col(c))
+            out_cols.append(q)
         elif k in ("categorical", "numeric_discrete"):
-            out_cols.append(F.col(f"{c}_code"))
+            out_cols.append(codes[c])
         elif k == "timestamp":
             # cast handles timestamp_ntz (session TZ pinned to UTC)
             out_cols.append(
-                (F.unix_micros(F.col(c).cast("timestamp")) / F.lit(86_400_000_000))
-                .cast("int")
-                .alias(f"{c}_daybucket")
+                f"CAST(unix_micros(CAST({q} AS TIMESTAMP)) / 86400000000L AS INT) "
+                f"AS {_ident(c + '_daybucket')}"
             )
         elif k == "text":
-            out_cols.append(F.md5(F.col(c)).alias(f"{c}_fp"))
+            out_cols.append(f"md5({q}) AS {_ident(c + '_fp')}")
         elif k in ("json", "vector"):
-            out_cols.append(F.col(c).cast("string").alias(f"{c}_raw"))
+            out_cols.append(f"CAST({q} AS STRING) AS {_ident(c + '_raw')}")
     if not cont:
-        return df.select(*out_cols)
+        return df.selectExpr(*out_cols)
     # Single-pass: run the Bucketizer over the full frame (keeping every
     # original column so the non-continuous token expressions still
     # resolve), then select tokens + bin codes together. No join — works
@@ -327,7 +353,7 @@ def auto_tokenize(
                 for c, v in bounds.items()
             }
     binned = bucketize(df, bounds, keep_cols=list(df.columns))
-    return binned.select(*out_cols, *[F.col(f"{c}_bin") for c in cont])
+    return binned.selectExpr(*out_cols, *[_ident(f"{c}_bin") for c in cont])
 
 
 def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,7 +362,7 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     treatment as q_quantile_bin_exact_boundaries) makes every routed
     output deterministic and SQL-expressible: identifiers pass through,
     discrete/categorical get vocabulary rank codes (== dense_rank over
-    the full column, computed as broadcast vocab joins), timestamps get
+    the full column, computed as literal map lookups), timestamps get
     epoch-day buckets, continuous measures get interior-boundary-count
     bins. The production path keeps the sketch fit (relative_error>0);
     only the boundary PLACEMENT differs — the exact fit is the

@@ -2172,9 +2172,13 @@ def q_events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
+    # No events: the global agg still emits one row, with an empty arr,
+    # and the fold's slice(arr, 2, size(arr) - 1) would be given length
+    # -1. An empty series has no states, so drop that row (the oracle's
+    # recursion likewise returns nothing).
     g = daily.agg(
         F.sort_array(F.collect_list(F.struct("d", "x"))).alias("arr")
-    )
+    ).where(F.size("arr") > 0)
     rows = g.select(
         F.explode(
             F.arrays_zip(F.col("arr"), F.expr(_HOLT_FOLD).alias("st"))

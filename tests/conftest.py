@@ -24,3 +24,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT
+
+
+@pytest.fixture
+def count_py4j_commands(spark, monkeypatch):
+    """``count(fn, *args)`` -> ``(fn(*args), n)``: n is the number of py4j
+    gateway commands the call sent, counted by wrapping the gateway
+    client's ``send_command``. Memory-release commands are not counted:
+    Python's garbage collector sends them whenever a JVM handle dies,
+    which is not the call's own traffic. Commands are counts, not
+    timings, so a pin on them holds on a loaded machine."""
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+
+    def count(fn, *args, **kwargs):
+        n = 0
+
+        def counting(command, *a, **kw):
+            nonlocal n
+            n += not command.startswith(protocol.MEMORY_COMMAND_NAME)
+            return send(command, *a, **kw)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            result = fn(*args, **kwargs)
+        return result, n
+
+    return count

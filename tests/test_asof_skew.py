@@ -99,6 +99,10 @@ def test_skew_probe_builders_split_hot_partition(spark, sf_dir):
     probe = importlib.import_module("scripts.probe_skew")
 
     confs = {
+        # the probe's own shuffle width (scripts/probe_skew.py): inheriting
+        # the session's core count instead leaves too few partitions on a
+        # small box for AQE to single one out as skewed
+        "spark.sql.shuffle.partitions": "64",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",

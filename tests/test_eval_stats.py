@@ -550,3 +550,28 @@ def test_holt_fold_matches_python_replay(spark, sf_dir):
         assert row["level_mu"] == l, row
         assert row["trend_mu"] == b, row
         assert row["forecast_next_mu"] == l + b, row
+
+
+def test_holt_linear_empty_input_matches_oracle(spark, sf_dir, tmp_path):
+    """With no events, events_holt_linear returns no rows, as its DuckDB
+    oracle does, instead of handing the fold a slice of length -1."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.timeseries import (
+        ORACLES,
+        q_events_holt_linear,
+    )
+    from tests.oracle_harness import compare
+
+    schema = pq.read_schema(os.path.join(sf_dir, "events.parquet"))
+    path = tmp_path / "events.parquet"
+    pq.write_table(schema.empty_table(), path)
+    df = q_events_holt_linear(spark, str(tmp_path))
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+        compare(df, con, ORACLES["events_holt_linear"], "events_holt_linear")
+    finally:
+        con.close()
+    assert df.count() == 0

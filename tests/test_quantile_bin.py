@@ -511,3 +511,75 @@ def test_persisted_boundaries_precomputed_seed(spark, sf_dir, tmp_path,
         spark, sf_dir, precomputed={"bogus": [1.0]}
     )
     assert again == built
+
+
+def test_bucketize_matches_searchsorted_on_edge_values(spark):
+    """bucketize's pinned semantics on the values that break naive
+    bucketizers: bin = np.searchsorted(interior, v, side="right") over
+    the deduplicated interior boundaries, with -0.0 equal to 0.0 on
+    either side, ±inf in the outer bins, and NaN and null in the last
+    bin."""
+    import numpy as np
+
+    bounds = {
+        # duplicate interior 0.0 and 2.0; a value of -0.0 meets a 0.0 boundary
+        "a": [-10.0, -1.0, 0.0, 0.0, 1.0, 2.0, 2.0, 10.0],
+        # a -0.0 boundary meets a value of 0.0
+        "b": [-3.0, -2.0, -0.0, 0.5, 0.5, 3.0],
+    }
+    values = [
+        float("nan"), None, float("inf"), float("-inf"), -0.0, 0.0,
+        -10.0, -1.0, 0.5, 1.0, 1.5, 2.0, 3.0, 10.0, -2.0, -100.0, 100.0,
+    ]
+    df = spark.createDataFrame(
+        [(i, v, v) for i, v in enumerate(values)], "id bigint, a double, b double"
+    )
+    got = {r["id"]: (r["a_bin"], r["b_bin"]) for r in bucketize(df, bounds, keep_cols=["id"]).collect()}
+    vals = np.array([np.nan if v is None else v for v in values])
+    for j, c in enumerate(("a", "b")):
+        interior = np.array(sorted({b + 0.0 for b in bounds[c][1:-1]}))
+        want = np.searchsorted(interior, vals, side="right")
+        assert [got[i][j] for i in range(len(values))] == want.tolist(), c
+        assert got[0][j] == got[1][j] == len(interior), "NaN/null not in the last bin"
+
+
+def test_bucketize_py4j_commands_do_not_grow_with_boundaries(spark, count_py4j_commands):
+    """Building the bucketize plan costs a fixed number of py4j commands
+    per call plus a few per column, never one per boundary: 20 columns x
+    101 boundaries stay within 300 commands (one command per split, as
+    handing the nested list to the pyspark.ml wrapper does, is about
+    4,800), and 11 boundaries cost exactly as many as 101."""
+    df = spark.range(8).selectExpr(*[f"CAST(id * {i} AS DOUBLE) AS c{i}" for i in range(20)])
+
+    def bounds(n):
+        return {f"c{i}": [float(j) for j in range(n)] for i in range(20)}
+
+    _, n101 = count_py4j_commands(bucketize, df, bounds(101))
+    _, n11 = count_py4j_commands(bucketize, df, bounds(11))
+    assert n101 <= 300, n101
+    assert n11 == n101, (n11, n101)
+
+
+def test_scalable_lane_survives_model_seed_failure(spark, sf_dir, monkeypatch, caplog):
+    """Seeding the persisted boundary model is a side effect of
+    q_quantile_bin_scalable, not its subject: when the seed raises, the
+    lane logs a warning and still returns its oracle-equal result."""
+    import logging
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
+        quantile_bin_queries as qbq,
+    )
+    from tests.oracle_harness import compare, duckdb_conn
+
+    def seed_fails(*_a, **_k):
+        raise OSError("No space left on device")
+
+    monkeypatch.setattr(qbq, "persisted_exact_boundaries", seed_fails)
+    with caplog.at_level(logging.WARNING, logger=qbq.__name__):
+        df = qbq.q_quantile_bin_scalable(spark, sf_dir)
+    assert "seeding the persisted boundary model failed" in caplog.text
+    con = duckdb_conn(sf_dir)
+    try:
+        compare(df, con, qbq.ORACLES["quantile_bin_scalable"], "quantile_bin_scalable")
+    finally:
+        con.close()
