@@ -26,21 +26,8 @@ import os
 import sys
 
 
-def _session(cpus: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark-cli")
-        .config("spark.sql.shuffle.partitions", str(min(int(cpus), 32)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-
-
 def main(argv: list[str] | None = None) -> int:
-    from . import queries_registry
+    from . import get_spark, queries_registry
 
     p = argparse.ArgumentParser(
         prog="auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark"
@@ -86,7 +73,10 @@ def main(argv: list[str] | None = None) -> int:
             print(f"did you mean: {', '.join(hint)}?", file=sys.stderr)
         return 2
 
-    spark = _session(args.cpus)
+    spark = get_spark(
+        app_name="auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark-cli",
+        cpus=args.cpus,
+    )
     df = queries[args.name](spark, args.sf_dir)
     if args.cmd == "explain":
         print(

@@ -93,17 +93,3 @@ def make_searchsorted_iter_udf(interior):
 
     return _bin
 
-
-def probe_plus1_pandas_udf():
-    """Trivial scalar pandas UDF (s + 1.0) — the minimal ArrowEvalPython
-    job scripts/probe_bench_context.py times to isolate Python-worker
-    spawn + Arrow init from real query logic. Lives here because this
-    module is hint-friendly (no ``from __future__ import annotations``)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _plus1(s: pd.Series) -> pd.Series:
-        return s + 1.0
-
-    return _plus1

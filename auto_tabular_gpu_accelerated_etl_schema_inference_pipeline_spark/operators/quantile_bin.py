@@ -34,6 +34,10 @@ and searchsorted-right semantics for the boundary paths):
    GPU is present. Used to demonstrate the vectorized-Python path and as
    the hook where RAPIDS/torch would slot in; parity-tested against (2).
 
+``QuantileBinModel`` wraps the fitted boundaries: fit, transform through
+either backend, and save/load as JSON — the tokenizer's one fitted
+state and its one on-disk format.
+
 Scale notes (100 TB): fit is one distributed pass producing KB of state;
 transform is embarrassingly parallel map work with zero shuffle — the plan
 is `Scan parquet -> Project(bucketize)` and survives any scale-up. The
@@ -43,6 +47,8 @@ only global op is the sketch merge on the driver.
 from __future__ import annotations
 
 import json
+import os
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -219,140 +225,141 @@ def fit_quantile_boundaries_exact_distributed(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .persist()
     )
-    stats = hist0.groupBy("col").agg(
-        F.min("value").alias("lo"),
-        F.max("value").alias("hi"),
-        F.sum("cnt").alias("n"),
-        F.count(F.lit(1)).alias("nd"),
-    ).collect()
-    mm = {r["col"]: (float(r["lo"]), float(r["hi"])) for r in stats}
-    n_by_col = {r["col"]: int(r["n"]) for r in stats}
-    for c in cols:
-        if n_by_col.get(c, 0) == 0:
-            raise ValueError(f"fit_quantile_boundaries: column {c} is all-null")
-
-    # --- integer ranks each percentile needs (1-based) ---
-    ranks: dict[str, list[int]] = {}
-    for c in cols:
-        n = n_by_col[c]
-        want: set[int] = set()
-        for p in probs:
-            pos = p * (n - 1)
-            want.add(math.floor(pos) + 1)
-            want.add(math.ceil(pos) + 1)
-        ranks[c] = sorted(want)
-
-    total_distinct = sum(int(r["nd"]) for r in stats)
-    if total_distinct <= driver_histogram_max:
-        # --- GUARDED driver fast path: the whole value histogram fits
-        # in driver memory (<= driver_histogram_max rows ≈ tens of MB —
-        # the same bounded-driver-state pattern as dedup_components'
-        # mask guard), so one Arrow toPandas replaces the coarse-bucket
-        # shuffle + window + broadcast-join round trip. Results are
-        # IDENTICAL: same canonicalized values, same rank lookup, same
-        # interpolation below. The measured guard keeps the distributed
-        # branch in charge whenever the value domain is actually large.
-        import numpy as np
-
-        pdf = hist0.toPandas()
-        hist0.unpersist()
-        at_rank: dict[str, dict[int, float]] = {}
+    try:
+        stats = hist0.groupBy("col").agg(
+            F.min("value").alias("lo"),
+            F.max("value").alias("hi"),
+            F.sum("cnt").alias("n"),
+            F.count(F.lit(1)).alias("nd"),
+        ).collect()
+        mm = {r["col"]: (float(r["lo"]), float(r["hi"])) for r in stats}
+        n_by_col = {r["col"]: int(r["n"]) for r in stats}
         for c in cols:
-            sub = pdf[pdf["col"] == c]
-            vals = sub["value"].to_numpy(dtype="float64")
-            cnts = sub["cnt"].to_numpy(dtype="int64")
-            order = np.argsort(vals)  # NaN sorts last == JVM Double order
-            cum = cnts[order].cumsum()
-            svals = vals[order]
-            idx = np.searchsorted(cum, np.asarray(ranks[c]), side="left")
-            at_rank[c] = {
-                k: float(svals[i]) for k, i in zip(ranks[c], idx)
-            }
+            if n_by_col.get(c, 0) == 0:
+                raise ValueError(f"fit_quantile_boundaries: column {c} is all-null")
+
+        # --- integer ranks each percentile needs (1-based) ---
+        ranks: dict[str, list[int]] = {}
+        for c in cols:
+            n = n_by_col[c]
+            want: set[int] = set()
+            for p in probs:
+                pos = p * (n - 1)
+                want.add(math.floor(pos) + 1)
+                want.add(math.ceil(pos) + 1)
+            ranks[c] = sorted(want)
+
+        total_distinct = sum(int(r["nd"]) for r in stats)
+        if total_distinct <= driver_histogram_max:
+            # --- GUARDED driver fast path: the whole value histogram fits
+            # in driver memory (<= driver_histogram_max rows ≈ tens of MB —
+            # the same bounded-driver-state pattern as dedup_components'
+            # mask guard), so one Arrow toPandas replaces the coarse-bucket
+            # shuffle + window + broadcast-join round trip. Results are
+            # IDENTICAL: same canonicalized values, same rank lookup, same
+            # interpolation below. The measured guard keeps the distributed
+            # branch in charge whenever the value domain is actually large.
+            import numpy as np
+
+            pdf = hist0.toPandas()
+            at_rank: dict[str, dict[int, float]] = {}
+            for c in cols:
+                sub = pdf[pdf["col"] == c]
+                vals = sub["value"].to_numpy(dtype="float64")
+                cnts = sub["cnt"].to_numpy(dtype="int64")
+                order = np.argsort(vals)  # NaN sorts last == JVM Double order
+                cum = cnts[order].cumsum()
+                svals = vals[order]
+                idx = np.searchsorted(cum, np.asarray(ranks[c]), side="left")
+                at_rank[c] = {
+                    k: float(svals[i]) for k, i in zip(ranks[c], idx)
+                }
+            return _interpolate_boundaries(cols, probs, n_by_col, at_rank)
+
+        # --- coarse range buckets (correctness-neutral load balancing) ---
+        bucket_expr = None
+        for c in cols:
+            lo, hi = mm.get(c, (0.0, 0.0))
+            if hi > lo:
+                b_c = F.least(
+                    F.floor(
+                        (F.col("value") - F.lit(lo))
+                        * F.lit(coarse_buckets / (hi - lo))
+                    ),
+                    F.lit(coarse_buckets - 1),
+                ).cast("int")
+            else:  # constant (or all-null) column: one bucket
+                b_c = F.lit(0)
+            cond = F.when(F.col("col") == c, b_c)
+            bucket_expr = cond if bucket_expr is None else bucket_expr.when(
+                F.col("col") == c, b_c
+            )
+        hist = hist0.withColumn("bucket", bucket_expr)
+
+        # --- two-phase prefix sum: within-bucket window + tiny bucket offsets
+        btot = (
+            hist.groupBy("col", "bucket")
+            .agg(F.sum("cnt").alias("btot"))
+            .collect()
+        )
+        offsets: dict[str, list[tuple[int, int, int]]] = {c: [] for c in cols}
+        run: dict[str, int] = {c: 0 for c in cols}
+        for r in sorted(btot, key=lambda r: (r["col"], r["bucket"])):
+            offsets[r["col"]].append((r["bucket"], run[r["col"]], r["btot"]))
+            run[r["col"]] += r["btot"]
+
+        # --- target ranks routed to the bucket whose global-rank span
+        # contains them DRIVER-side, so each histogram row only tests the
+        # handful of targets in its own bucket (a flat per-row filter over
+        # all ~2*(bins+1) targets measured 12 s at 583 k distinct values —
+        # 100x more lambda evals than needed).
+        per_bucket: dict[tuple[str, int], tuple[int, list[int]]] = {}
+        for c in cols:
+            spans = offsets[c]
+            it = iter(spans)
+            bucket, off, tot = next(it)
+            for k in ranks[c]:
+                while k > off + tot:
+                    bucket, off, tot = next(it)
+                key = (c, bucket)
+                if key not in per_bucket:
+                    per_bucket[key] = (off, [])
+                per_bucket[key][1].append(k)
+        # the targets relation is tiny (one row per bucket that contains a
+        # target rank) — an inner broadcast join both routes each histogram
+        # row to its own bucket's target list AND drops targetless buckets
+        targets_df = df.sparkSession.createDataFrame(
+            [(c, b, off, ks) for (c, b), (off, ks) in per_bucket.items()],
+            "col string, bucket int, off bigint, ks array<bigint>",
+        )
+        w_in = (
+            Window.partitionBy("col", "bucket")
+            .orderBy("value")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        looked = (
+            hist.withColumn("cum_in", F.sum("cnt").over(w_in))
+            .join(F.broadcast(targets_df), ["col", "bucket"])
+            .withColumn("cum_end", F.col("off") + F.col("cum_in"))
+            .withColumn("cum_start", F.col("cum_end") - F.col("cnt"))
+            .select(
+                "col",
+                "value",
+                F.explode(
+                    F.filter(
+                        F.col("ks"),
+                        lambda k: (k > F.col("cum_start")) & (k <= F.col("cum_end")),
+                    )
+                ).alias("rank"),
+            )
+            .collect()
+        )
+        at_rank: dict[str, dict[int, float]] = {c: {} for c in cols}
+        for r in looked:
+            at_rank[r["col"]][r["rank"]] = r["value"]
         return _interpolate_boundaries(cols, probs, n_by_col, at_rank)
-
-    # --- coarse range buckets (correctness-neutral load balancing) ---
-    bucket_expr = None
-    for c in cols:
-        lo, hi = mm.get(c, (0.0, 0.0))
-        if hi > lo:
-            b_c = F.least(
-                F.floor(
-                    (F.col("value") - F.lit(lo))
-                    * F.lit(coarse_buckets / (hi - lo))
-                ),
-                F.lit(coarse_buckets - 1),
-            ).cast("int")
-        else:  # constant (or all-null) column: one bucket
-            b_c = F.lit(0)
-        cond = F.when(F.col("col") == c, b_c)
-        bucket_expr = cond if bucket_expr is None else bucket_expr.when(
-            F.col("col") == c, b_c
-        )
-    hist = hist0.withColumn("bucket", bucket_expr)
-
-    # --- two-phase prefix sum: within-bucket window + tiny bucket offsets
-    btot = (
-        hist.groupBy("col", "bucket")
-        .agg(F.sum("cnt").alias("btot"))
-        .collect()
-    )
-    offsets: dict[str, list[tuple[int, int, int]]] = {c: [] for c in cols}
-    run: dict[str, int] = {c: 0 for c in cols}
-    for r in sorted(btot, key=lambda r: (r["col"], r["bucket"])):
-        offsets[r["col"]].append((r["bucket"], run[r["col"]], r["btot"]))
-        run[r["col"]] += r["btot"]
-
-    # --- target ranks routed to the bucket whose global-rank span
-    # contains them DRIVER-side, so each histogram row only tests the
-    # handful of targets in its own bucket (a flat per-row filter over
-    # all ~2*(bins+1) targets measured 12 s at 583 k distinct values —
-    # 100x more lambda evals than needed).
-    per_bucket: dict[tuple[str, int], tuple[int, list[int]]] = {}
-    for c in cols:
-        spans = offsets[c]
-        it = iter(spans)
-        bucket, off, tot = next(it)
-        for k in ranks[c]:
-            while k > off + tot:
-                bucket, off, tot = next(it)
-            key = (c, bucket)
-            if key not in per_bucket:
-                per_bucket[key] = (off, [])
-            per_bucket[key][1].append(k)
-    # the targets relation is tiny (one row per bucket that contains a
-    # target rank) — an inner broadcast join both routes each histogram
-    # row to its own bucket's target list AND drops targetless buckets
-    targets_df = df.sparkSession.createDataFrame(
-        [(c, b, off, ks) for (c, b), (off, ks) in per_bucket.items()],
-        "col string, bucket int, off bigint, ks array<bigint>",
-    )
-    w_in = (
-        Window.partitionBy("col", "bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    looked = (
-        hist.withColumn("cum_in", F.sum("cnt").over(w_in))
-        .join(F.broadcast(targets_df), ["col", "bucket"])
-        .withColumn("cum_end", F.col("off") + F.col("cum_in"))
-        .withColumn("cum_start", F.col("cum_end") - F.col("cnt"))
-        .select(
-            "col",
-            "value",
-            F.explode(
-                F.filter(
-                    F.col("ks"),
-                    lambda k: (k > F.col("cum_start")) & (k <= F.col("cum_end")),
-                )
-            ).alias("rank"),
-        )
-        .collect()
-    )
-    hist0.unpersist()
-    at_rank: dict[str, dict[int, float]] = {c: {} for c in cols}
-    for r in looked:
-        at_rank[r["col"]][r["rank"]] = r["value"]
-    return _interpolate_boundaries(cols, probs, n_by_col, at_rank)
+    finally:
+        hist0.unpersist()
 
 
 def _interpolate_boundaries(
@@ -547,49 +554,6 @@ def _interior_splits(bounds: list[float]) -> list[float]:
     return interior
 
 
-def save_boundaries(
-    spark, bounds: dict[str, list[float]], path: str
-) -> None:
-    """Persist a fitted boundary model as a tiny parquet artifact
-    ((col, idx, value) rows — engine-neutral, human-inspectable, exact:
-    doubles round-trip parquet bit-for-bit). This is the train/serve
-    split the reference's in-process fit+transform lacks: fit once on
-    the training corpus, ship the KB-sized model, tokenize any later
-    batch/stream without refitting."""
-    rows = [
-        (c, i, float(v))
-        for c, vals in bounds.items()
-        for i, v in enumerate(vals)
-    ]
-    # One-slice parallelize, NOT createDataFrame(rows).coalesce(1): the
-    # plain createDataFrame spreads the pickled rows over default-
-    # parallelism slices, and coalesce(1) then evaluates all 32 parent
-    # slices SERIALLY inside one task — one Python-worker round-trip
-    # each, measured 5.3 s for a 400-row model vs 0.4 s single-slice
-    # (r13; the cost landed in every first-on-box model build).
-    (
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1),
-            "col string, idx int, value double",
-        )
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def load_boundaries(spark, path: str) -> dict[str, list[float]]:
-    """Reload a save_boundaries artifact. The collect is bounded by
-    model size (cols × (bins+1) rows — KBs), never data size."""
-    rows = spark.read.parquet(path).collect()
-    out: dict[str, dict[int, float]] = {}
-    for r in rows:
-        out.setdefault(r["col"], {})[r["idx"]] = r["value"]
-    return {
-        c: [idx_map[i] for i in sorted(idx_map)]
-        for c, idx_map in out.items()
-    }
-
-
 def _ident(c: str) -> str:
     """``c`` as a back-quoted SQL identifier."""
     return "`" + c.replace("`", "``") + "`"
@@ -752,8 +716,88 @@ def bucketize_map_in_arrow(
 
 
 # ---------------------------------------------------------------------------
-# End-to-end pipeline (reference entry point: scan -> fit -> transform)
+# The fitted model and the end-to-end pipeline (reference entry point:
+# scan -> fit -> transform)
 # ---------------------------------------------------------------------------
+
+#: version of the JSON written by QuantileBinModel.save
+FORMAT_VERSION = 1
+
+
+@dataclass
+class QuantileBinModel:
+    """The tokenizer's fitted state: bins+1 boundary floats per column
+    (KBs), the reference's boundary tensor (etl_benchmark.py:74, read
+    back at :79). The reference's state dies with its process; this one
+    saves to JSON and loads back bit for bit (``json`` writes each
+    double as its shortest round-trip repr, -0.0 and subnormals
+    included, and ±inf as the ``Infinity`` tokens it reads back), so a
+    pipeline fits once and transforms later batches and streams
+    without refitting."""
+
+    bins: int = DEFAULT_BINS
+    boundaries: dict[str, list[float]] = field(default_factory=dict)
+    relative_error: float = 0.001
+    fit_strategy: str = "sketch"
+
+    @classmethod
+    def fit(
+        cls,
+        df: DataFrame,
+        cols: list[str],
+        bins: int = DEFAULT_BINS,
+        relative_error: float = 0.001,
+        strategy: str = "sketch",
+    ) -> "QuantileBinModel":
+        """``strategy="sketch"``: fit_quantile_boundaries at
+        ``relative_error`` (0 is the exact distributed fit);
+        ``"sampled"``: fit_quantile_boundaries_sampled."""
+        if strategy == "sampled":
+            bounds = fit_quantile_boundaries_sampled(df, cols, bins)
+        else:
+            bounds = fit_quantile_boundaries(df, cols, bins, relative_error)
+        return cls(bins, bounds, relative_error, strategy)
+
+    def transform(
+        self,
+        df: DataFrame,
+        keep_cols: list[str] | None = None,
+        backend: str = "bucketizer",
+    ) -> DataFrame:
+        """Bin every modelled column: ``backend="bucketizer"`` is the
+        JVM lane (:func:`bucketize`), ``"pandas_udf"`` the Arrow lane
+        (:func:`bucketize_pandas_udf`); both give the same bins."""
+        if backend == "pandas_udf":
+            return bucketize_pandas_udf(df, self.boundaries, keep_cols=keep_cols)
+        return bucketize(df, self.boundaries, keep_cols=keep_cols)
+
+    def save(self, path: str) -> None:
+        payload = {
+            "format_version": FORMAT_VERSION,
+            "bins": self.bins,
+            "relative_error": self.relative_error,
+            "fit_strategy": self.fit_strategy,
+            "boundaries": self.boundaries,
+        }
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        with open(path, "w") as f:
+            json.dump(payload, f)
+
+    @classmethod
+    def load(cls, path: str) -> "QuantileBinModel":
+        with open(path) as f:
+            payload = json.load(f)
+        if payload.get("format_version") != FORMAT_VERSION:
+            raise ValueError(
+                f"unsupported model format {payload.get('format_version')}"
+            )
+        return cls(
+            bins=payload["bins"],
+            boundaries={k: [float(x) for x in v] for k, v in payload["boundaries"].items()},
+            relative_error=payload["relative_error"],
+            fit_strategy=payload["fit_strategy"],
+        )
+
 
 def tokenize_table(
     df: DataFrame,
@@ -771,7 +815,5 @@ def tokenize_table(
             for f in df.schema.fields
             if f.dataType.typeName() in ("double", "float")
         ]
-    bounds = fit_quantile_boundaries(df, cols, bins, relative_error)
-    if backend == "pandas_udf":
-        return bucketize_pandas_udf(df, bounds, keep_cols=keep_cols)
-    return bucketize(df, bounds, keep_cols=keep_cols)
+    model = QuantileBinModel.fit(df, cols, bins, relative_error)
+    return model.transform(df, keep_cols=keep_cols, backend=backend)

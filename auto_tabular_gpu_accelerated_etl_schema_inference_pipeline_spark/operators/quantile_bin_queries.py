@@ -3,11 +3,11 @@
 
 from __future__ import annotations
 
-import logging
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import configure_for_oracle, load_table
+from ..session import ContextCache, configure_for_oracle, load_table
 from .quantile_bin import (
     LINEITEM_KEYS,
     LINEITEM_MEASURES,
@@ -48,18 +48,9 @@ def q_quantile_bin_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Recipe version of the persisted boundary artifact (see
-#: persisted_exact_boundaries). Encodes the knobs that shape the
-#: model's VALUES. Fit-LOGIC changes are caught automatically (the
-#: cache tag also hashes the fit functions' source); bump this only
-#: for recipe changes the source hash can't see (e.g. a data contract
-#: change in the fixture itself).
-_BOUNDARY_MODEL_SPEC = "exact-fit:bins=100:round=6dp:v1"
-
-
 def _exact_rounded_boundaries(df: DataFrame) -> dict[str, list[float]]:
-    """Deterministic, DuckDB-expressible boundary fit shared by the three
-    transform lanes below: the distributed exact percentile fit
+    """Deterministic, DuckDB-expressible boundary fit shared by the
+    lineitem transform lanes: the distributed exact percentile fit
     (histogram + two-phase prefix sum — NOT the single-reducer SQL
     ``percentile`` aggregate) with the 6dp ulp treatment of
     q_quantile_bin_exact_boundaries. Production keeps the sketch fit
@@ -73,137 +64,71 @@ def _exact_rounded_boundaries(df: DataFrame) -> dict[str, list[float]]:
     return {c: [round(x, 6) for x in v] for c, v in bounds.items()}
 
 
+#: the fitted exact lineitem model, per SparkContext and fixture
+_EXACT_MODEL = ContextCache()
+
+
+def exact_lineitem_boundaries(
+    spark: SparkSession, sf_dir: str
+) -> dict[str, list[float]]:
+    """The _exact_rounded_boundaries model of ``sf_dir``'s lineitem,
+    fitted at most once per session and held in driver memory (KBs).
+    The serving lanes (pandas_udf, map_in_arrow, saved_model,
+    auto_tokenize_lineitem, streaming_tokenize_lineitem) test their
+    transform, not the fit, so they share this one fit instead of each
+    paying it. Nothing outlives the session: the fixture is read fresh
+    by every new context."""
+    return _EXACT_MODEL.get(
+        spark,
+        (os.path.abspath(sf_dir),),
+        lambda: _exact_rounded_boundaries(load_table(spark, sf_dir, "lineitem")),
+    )
+
+
 def q_quantile_bin_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed-exact fit + JVM Bucketizer transform — the 100 TB path
     (reference O5+O7), oracle-backed since the exact fit + 6dp rounding
     makes every bin DuckDB-expressible (VERDICT r3 item 3). The sketch
     fit stays the production default in tokenize_table; its placement-
-    only divergence is parity-tested in tests/test_quantile_bin.py."""
+    only divergence is parity-tested in tests/test_quantile_bin.py.
+
+    The fit is this lane's subject, so it runs on every call; when the
+    session holds no exact model yet, this fit becomes it."""
     from .quantile_bin import bucketize
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     bounds = _exact_rounded_boundaries(df)
-    # Seed the persisted boundary artifact with the fit THIS lane just
-    # paid for (write-if-absent, r13): the five model-serving lanes
-    # (pandas_udf / map_in_arrow / saved_model / auto_tokenize /
-    # streaming tokenize) otherwise rebuild the IDENTICAL model — the
-    # same _exact_rounded_boundaries over the same fixture — inside
-    # whichever of them runs first on a fresh box, which is exactly the
-    # intermittent 9-12 s quantile_bin_pandas_udf bench reading
-    # VERDICT r10-r12 chased (guide §1.2: don't compute things you
-    # throw away). This lane's subject (the distributed exact fit) is
-    # unchanged — it still fits in-lane every run; only the fit's
-    # OUTPUT is now reused instead of recomputed. The seed is a side
-    # effect, not this lane's subject: a failure to write it (a full or
-    # read-only temp dir) is logged and the lane's own result returned —
-    # the serving lanes then build the model themselves.
-    try:
-        persisted_exact_boundaries(spark, sf_dir, precomputed=bounds)
-    except Exception:
-        logging.getLogger(__name__).warning(
-            "seeding the persisted boundary model failed", exc_info=True
-        )
+    _EXACT_MODEL.get(spark, (os.path.abspath(sf_dir),), lambda: bounds)
     return bucketize(df, bounds, keep_cols=LINEITEM_KEYS)
 
 
 def q_quantile_bin_saved_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model persistence round-trip (the train/serve split): the exact
-    boundary fit is SAVED as a KB-sized parquet artifact
-    (write-if-absent per fixture), RELOADED from disk, and only the
-    reloaded model drives the Bucketizer transform — proving the
-    persisted artifact carries the full model bit-for-bit (doubles
-    round-trip parquet exactly, so the oracle is the same shared
-    boundary oracle as the in-memory lanes). At 100 TB this is how the
-    tokenizer actually deploys: fit on the training corpus once, ship
-    the artifact, tokenize every later batch/stream without refitting."""
-    from .quantile_bin import bucketize
+    """Model persistence round-trip (the train/serve split): the
+    session's exact lineitem model is SAVED as QuantileBinModel JSON to
+    a directory this call owns, RELOADED, and the directory removed;
+    only the reloaded model drives the Bucketizer transform — proving
+    the saved JSON carries the full model bit for bit (the oracle is
+    the same shared boundary oracle as the in-memory lanes). At 100 TB
+    this is how the tokenizer deploys: fit on the training corpus once,
+    ship the KB-sized file, tokenize every later batch/stream without
+    refitting."""
+    import tempfile
+
+    from .quantile_bin import QuantileBinModel
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
-    return bucketize(
-        df, persisted_exact_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS
+    model = QuantileBinModel(
+        bins=100,
+        boundaries=exact_lineitem_boundaries(spark, sf_dir),
+        relative_error=0.0,
     )
-
-
-def persisted_exact_boundaries(
-    spark: SparkSession, sf_dir: str,
-    precomputed: dict[str, list[float]] | None = None,
-) -> dict[str, list[float]]:
-    """Load (building once per fixture) the persisted exact-fit boundary
-    artifact for lineitem's measures — the fit-once/serve-forever
-    artifact the saved-model lane proves. Shared with the auto-tokenize
-    lane (VERDICT r5 item 4): both deploy the SAME model in production,
-    so both serve from the same KB parquet artifact instead of paying
-    the exact distributed fit per query.
-
-    ``precomputed`` (r13): a boundary dict a caller ALREADY fitted with
-    ``_exact_rounded_boundaries`` over this fixture — seeds the artifact
-    without a second fit when the model is absent (the
-    q_quantile_bin_scalable lane fits in-lane as its subject and its
-    output is bit-identical to what the build here would produce, same
-    function over the same files). Ignored when the model exists."""
-    import hashlib
-    import inspect
-    import os
-    import tempfile
-
-    from .quantile_bin import (
-        fit_quantile_boundaries,
-        fit_quantile_boundaries_exact_distributed,
-        load_boundaries,
-        save_boundaries,
-    )
-
-    src = os.path.abspath(os.path.join(sf_dir, "lineitem.parquet"))
-    stat = os.stat(src)
-    # The tag salts the fixture identity with the MODEL recipe — five
-    # oracle lanes serve this artifact, so a change to the fit/rounding
-    # logic must invalidate /tmp caches. Two layers: the human-readable
-    # _BOUNDARY_MODEL_SPEC for knob changes, plus a hash of the actual
-    # fit-path SOURCE (this module's recipe fn and both quantile_bin
-    # fit fns it rides), so an edit to the fit logic invalidates even
-    # when nobody remembers to bump the spec string.
-    # getsource needs the .py on disk; in a pyc-only / zipapp / frozen
-    # deployment it raises OSError (ADVICE r7) — fall back to the
-    # compiled bytecode, which still changes whenever the fit logic does
-    # (only comment/docstring edits stop invalidating, an acceptable
-    # loss vs five lanes failing outright).
-    _fit_fns = (
-        _exact_rounded_boundaries,
-        fit_quantile_boundaries,
-        fit_quantile_boundaries_exact_distributed,
-    )
-    try:
-        fit_src = "".join(inspect.getsource(f) for f in _fit_fns).encode()
-    except OSError:
-        fit_src = b"".join(f.__code__.co_code for f in _fit_fns)
-    recipe = hashlib.md5(fit_src).hexdigest()[:8]
-    tag = hashlib.md5(
-        f"{_BOUNDARY_MODEL_SPEC}:{recipe}:{src}:{stat.st_size}:"
-        f"{int(stat.st_mtime)}".encode()
-    ).hexdigest()[:12]
-    model_dir = os.path.join(tempfile.gettempdir(), f"qbin_model_{tag}")
-    if not os.path.exists(model_dir):
-        # pid alone is not call-unique: two threads in one process (or a
-        # retry after a failed save) would share the build path and the
-        # second overwrite would delete the first's in-progress artifact
-        import uuid
-
-        build = f"{model_dir}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-        if precomputed is not None:
-            bounds = precomputed
-        else:
-            df = load_table(spark, sf_dir, "lineitem")
-            bounds = _exact_rounded_boundaries(df)
-        save_boundaries(spark, bounds, build)
-        try:
-            os.rename(build, model_dir)
-        except OSError:  # concurrent builder won
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
-    return load_boundaries(spark, model_dir)
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "model.json")
+        model.save(path)
+        served = QuantileBinModel.load(path)
+    return served.transform(df, keep_cols=LINEITEM_KEYS)
 
 
 def q_quantile_bin_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,15 +136,14 @@ def q_quantile_bin_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     port, etl_benchmark.py:53,79) over the same deterministic exact-fit
     boundaries — value-verifies the Python kernel's searchsorted
     semantics (incl. -0.0/NaN handling) against the SQL oracle, not just
-    against the Bucketizer twin. Serves the persisted boundary model
-    (bit-identical to the in-query fit) — this lane's subject is the
-    Arrow KERNEL, not the fit, so it doesn't re-pay the fit."""
+    against the Bucketizer twin. Serves the session's exact model — this
+    lane's subject is the Arrow KERNEL, not the fit."""
     from .quantile_bin import bucketize_pandas_udf
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return bucketize_pandas_udf(
-        df, persisted_exact_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS
+        df, exact_lineitem_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS
     )
 
 
@@ -255,7 +179,6 @@ _GEN_COLNAMES = [f"col_{i}" for i in range(GEN_COLS)]
 
 
 def _generated_path() -> str:
-    import os
     import tempfile
 
     return os.path.join(
@@ -274,8 +197,6 @@ def q_tokenize_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine interpolation ulps (same treatment as the lineitem
     lanes; adjacent 1%-quantile spacing on 100k randn is ~1e-3, three
     orders above the rounding quantum, so no bin can flip)."""
-    import os
-
     from ..sources.generator import generate_normal_table
     from .quantile_bin import bucketize, fit_quantile_boundaries
 
@@ -321,14 +242,14 @@ def q_quantile_bin_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketize_map_in_arrow) over the deterministic exact-fit boundaries —
     oracle-backed like the other two transform lanes; NaN/null parity
     with the Bucketizer lane additionally test-pinned. Serves the
-    persisted boundary model like the pandas_udf lane — the subject is
-    the raw-Arrow kernel, not the fit."""
+    session's exact model like the pandas_udf lane — the subject is the
+    raw-Arrow kernel, not the fit."""
     from .quantile_bin import bucketize_map_in_arrow
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
     return bucketize_map_in_arrow(
-        df, persisted_exact_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS
+        df, exact_lineitem_boundaries(spark, sf_dir), keep_cols=LINEITEM_KEYS
     )
 
 

@@ -257,8 +257,6 @@ def auto_tokenize(
     spark: SparkSession,
     df: DataFrame,
     table: str,
-    relative_error: float | None = None,
-    boundary_round: int | None = None,
     classes_df: DataFrame | None = None,
     boundaries: dict[str, list[float]] | None = None,
 ) -> DataFrame:
@@ -267,24 +265,16 @@ def auto_tokenize(
     quantile codes, categorical/discrete -> dict codes, timestamp ->
     epoch-day bucket, text -> md5 fingerprint, identifier -> passthrough.
 
-    ``relative_error``: quantile-fit accuracy — None (the default)
-    resolves to the 0.001 sketch fit, the 100 TB setting; 0.0 switches
-    to exact SQL ``percentile``, which
-    (with ``boundary_round``, see q_quantile_bin_exact_boundaries for the
-    ulp rationale) makes the whole routed output oracle-matchable.
+    Continuous columns get the 0.001 sketch fit, the 100 TB setting.
 
     Serve mode: ``classes_df`` (a precomputed infer_column_classes
-    frame) and ``boundaries`` (a fitted, already-rounded boundary model
-    covering every continuous column) skip the profiling pass and the
-    fit respectively — the production deployment shape, where both are
-    fitted once on the training corpus and served to every later batch.
-    A model covering less than the full continuous set is ignored and
-    everything is refit (a partial model is a stale model) — the fit
-    knobs apply to THAT refit. When a full model is served, the fit
-    knobs are ignored by construction (the model already encodes its
-    recipe); passing ANY fit knob alongside a full model — even one
-    spelled as the default value — warns loudly, because it means the
-    caller thinks they are steering a fit that will never run."""
+    frame) and ``boundaries`` (a fitted, already-rounded boundary model)
+    skip the profiling pass and the fit respectively — the production
+    deployment shape, where both are fitted once on the training corpus
+    and served to every later batch. A served model must cover every
+    inferred-continuous column: one that misses a column raises
+    ``ValueError`` (a partial model is a stale model, and refitting
+    behind the caller's back would mix model vintages)."""
     from .quantile_bin import bucketize, fit_quantile_boundaries
 
     if classes_df is None:
@@ -295,6 +285,13 @@ def auto_tokenize(
         r["column_name"]: r["inferred_class"] for r in classes_df.collect()
     }
     cont = [c for c, k in classes.items() if k == "numeric_continuous"]
+    if boundaries is not None:
+        missing = [c for c in cont if c not in boundaries]
+        if missing:
+            raise ValueError(
+                "auto_tokenize: the served boundary model does not cover "
+                f"inferred-continuous columns {missing}"
+            )
     # Dict codes are literal map lookups in the output projection (see
     # _dict_codes), NOT a global dense_rank window — that funnels the
     # whole fact table through one partition per encoded column — and
@@ -326,32 +323,10 @@ def auto_tokenize(
     # resolve), then select tokens + bin codes together. No join — works
     # for tables with no identifier column (the reference's canonical
     # all-numeric col_0..col_19 shape) and keeps the plan map-only.
-    if boundaries is not None and all(c in boundaries for c in cont):
-        # None-default sentinel (ADVICE r7): ANY explicitly passed fit
-        # knob — including an explicit 0.001 — means the caller thinks
-        # a fit will run; `!= 0.001` couldn't distinguish that intent
-        # from an unset default.
-        if relative_error is not None or boundary_round is not None:
-            import warnings
-
-            warnings.warn(
-                "auto_tokenize: a full boundary model is being served, "
-                "so relative_error/boundary_round are ignored — the "
-                "model already encodes its fit recipe. Drop the knobs "
-                "or drop the model.",
-                stacklevel=2,
-            )
-        bounds = {c: boundaries[c] for c in cont}  # serve path: no refit
+    if boundaries is None:
+        bounds = fit_quantile_boundaries(df, cont, bins=100)
     else:
-        bounds = fit_quantile_boundaries(
-            df, cont, bins=100,
-            relative_error=0.001 if relative_error is None else relative_error,
-        )
-        if boundary_round is not None:
-            bounds = {
-                c: [round(x, boundary_round) for x in v]
-                for c, v in bounds.items()
-            }
+        bounds = {c: boundaries[c] for c in cont}
     binned = bucketize(df, bounds, keep_cols=list(df.columns))
     return binned.selectExpr(*out_cols, *[_ident(f"{c}_bin") for c in cont])
 
@@ -371,13 +346,12 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Serve shape (VERDICT r5 item 4): the stats pass is session-memoized
     (shared with q_schema_infer — both profile the same fixture) and
-    the boundary model is served from the SAME persisted artifact the
-    saved-model lane builds — fit once per fixture, serve every lane.
-    The artifact's boundaries are bit-identical to what the in-query
-    fit produced (same fit, same 6dp rounding, doubles round-trip
-    parquet exactly), so the oracle is unchanged."""
+    the boundary model is the session's exact lineitem model, the same
+    one the quantile_bin serving lanes use — one fit per session, so
+    the oracle is unchanged. auto_tokenize rejects it if it misses an
+    inferred-continuous column (classifier and model drifted apart)."""
     from ..session import session_memo
-    from .quantile_bin_queries import persisted_exact_boundaries
+    from .quantile_bin_queries import exact_lineitem_boundaries
 
     configure_for_oracle(spark)
     df = load_table(spark, sf_dir, "lineitem")
@@ -387,32 +361,12 @@ def q_auto_tokenize_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: infer_column_classes(spark, df, "lineitem"),
     )
-    bounds = persisted_exact_boundaries(spark, sf_dir)
-    # This lane's oracle is written against the SERVED exact model —
-    # auto_tokenize's partial-model fallback would silently refit with
-    # the (sketch) production defaults and stop matching it. Fail loud
-    # instead: a partial artifact here means the classifier and the
-    # artifact recipe have drifted apart and the artifact must be
-    # re-fit, not papered over in-query.
-    cont = [
-        r["column_name"]
-        for r in stats.collect()
-        if r["inferred_class"] == "numeric_continuous"
-    ]
-    missing = [c for c in cont if c not in bounds]
-    if missing:
-        raise ValueError(
-            "persisted boundary model does not cover inferred-continuous "
-            f"columns {missing}; rebuild the artifact (see "
-            "persisted_exact_boundaries) instead of falling back to an "
-            "in-query sketch refit"
-        )
     return auto_tokenize(
         spark,
         df,
         "lineitem",
         classes_df=stats,
-        boundaries=bounds,
+        boundaries=exact_lineitem_boundaries(spark, sf_dir),
     )
 
 

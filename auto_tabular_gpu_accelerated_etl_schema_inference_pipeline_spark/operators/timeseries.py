@@ -2081,44 +2081,47 @@ FROM agg
 """
 
 
-#: Holt's linear-trend smoothing: α = 2/10, β = 1/10, state in exact
-#: micro-units, every step's division written as the truncation-
-#: identity (v − v%10)/10 — integer-exact in BOTH engines (the quotient
-#: is < 2^53, so even DuckDB's float division is exact; % is C-style
-#: truncating remainder in both).
-#: The ORACLE runs the recurrence as this recursive CTE over a
-#: MATERIALIZED 30-row daily spine (DuckDB's default CTE inlining would
-#: re-run the events aggregate per level, the r4 batch-15 hazard).
-#: Spark replays the IDENTICAL arithmetic as an ordered array fold
-#: (r13, guide §1.2 "fix the distributed algorithm first"): Spark
-#: re-plans a recursive CTE per UnionLoop level — even with the spine
-#: checkpoint-materialized (the r12 shape) the ~30-level walk measured
-#: ~4.5 s of per-level re-planning for a 30-row result, against a
-#: ~0.6 s single-plan fold (the q_events_cusum_changepoints
-#: state-append pattern). The step expressions below are assembled
-#: from the same (v − v%10)/10 truncation text, so the two engines
-#: still execute the same integer arithmetic — only the iteration
-#: mechanism differs (plan recursion vs array fold).
+# Holt's linear-trend smoothing: α = 2/10, β = 1/10, state in exact
+# micro-units. The ORACLE runs the recurrence as a recursive CTE over a
+# MATERIALIZED daily spine (DuckDB's default CTE inlining would re-run
+# the events aggregate per level, the r4 batch-15 hazard). Spark
+# replays it as an ordered array fold (r13, guide §1.2 "fix the
+# distributed algorithm first"): Spark re-plans a recursive CTE per
+# UnionLoop level — even with the spine checkpoint-materialized (the
+# r12 shape) the ~30-level walk measured ~4.5 s of per-level
+# re-planning for a 30-row result, against a ~0.6 s single-plan fold
+# (the q_events_cusum_changepoints state-append pattern). Both engines
+# take their step text from _holt_step, so they execute the same
+# integer arithmetic; only the iteration mechanism differs (plan
+# recursion vs array fold).
+def _holt_step(x: str, level: str, trend: str) -> tuple[str, str]:
+    """SQL text of one Holt step from the previous state (``level``,
+    ``trend``) and the day's count ``x``:
+    l' = (2·x·10⁶ + 8·(l+b)) ÷ 10,  b' = (l' − l + 9·b) ÷ 10.
+    Each ÷ 10 is the truncation identity (v − v%10)/10: % is truncating
+    remainder in both engines, the dividend is an exact multiple of 10,
+    and the quotient is < 2^53, so even DuckDB's float division is
+    exact."""
+
+    def div10(v: str) -> str:
+        return f"CAST((({v}) - (({v}) % 10)) / 10 AS BIGINT)"
+
+    level_new = div10(f"2 * {x} * 1000000 + 8 * ({level} + {trend})")
+    return level_new, div10(f"{level_new} - {level} + 9 * {trend}")
+
+
 _HOLT_WALK_SQL = """
 walk(rn, d, x, l_mu, b_mu) AS (
-  SELECT rn, d, x, x * 1000000, CAST(0 AS BIGINT) FROM {spine}
+  SELECT rn, d, x, x * 1000000, CAST(0 AS BIGINT) FROM spine
   WHERE rn = 1
   UNION ALL
-  SELECT rn, d, x, l_new,
-    CAST((l_new - l_prev + 9 * b_prev
-          - ((l_new - l_prev + 9 * b_prev) % 10)) / 10 AS BIGINT)
-  FROM (
-    SELECT s.rn, s.d, s.x, w.l_mu AS l_prev, w.b_mu AS b_prev,
-      CAST((2 * s.x * 1000000 + 8 * (w.l_mu + w.b_mu)
-            - ((2 * s.x * 1000000 + 8 * (w.l_mu + w.b_mu)) % 10)) / 10
-           AS BIGINT) AS l_new
-    FROM walk w JOIN {spine} s ON s.rn = w.rn + 1
-  ) step
+  SELECT s.rn, s.d, s.x, {0}, {1}
+  FROM walk w JOIN spine s ON s.rn = w.rn + 1
 )
 SELECT CAST(d AS DATE) AS day, x AS n_events, l_mu AS level_mu,
   b_mu AS trend_mu, l_mu + b_mu AS forecast_next_mu
 FROM walk
-"""
+""".format(*_holt_step("s.x", "w.l_mu", "w.b_mu"))
 
 _HOLT_LINEAR_ORACLE = (
     """
@@ -2130,27 +2133,15 @@ WITH RECURSIVE daily AS MATERIALIZED (
   FROM daily
 ),
 """
-    + _HOLT_WALK_SQL.format(spine="spine")
+    + _HOLT_WALK_SQL
 )
 
-#: the Holt step, assembled from the SAME truncation-identity text the
-#: oracle recursion uses ((v − v%10)/10 == trunc-toward-zero div 10 —
-#: % is truncating remainder in both engines, the dividend is an exact
-#: multiple of 10, and the quotient is < 2^53 so the float division is
-#: exact):  l' = (2·x·10⁶ + 8·(l+b)) ÷ 10,  b' = (l' − l + 9·b) ÷ 10
-_HOLT_L_PREV = "element_at(acc, -1).l"
-_HOLT_B_PREV = "element_at(acc, -1).b"
-_HOLT_A1 = f"(2 * e.x * 1000000 + 8 * ({_HOLT_L_PREV} + {_HOLT_B_PREV}))"
-_HOLT_L_NEW = f"CAST(({_HOLT_A1} - ({_HOLT_A1} % 10)) / 10 AS BIGINT)"
-_HOLT_A2 = f"({_HOLT_L_NEW} - {_HOLT_L_PREV} + 9 * {_HOLT_B_PREV})"
-_HOLT_B_NEW = f"CAST(({_HOLT_A2} - ({_HOLT_A2} % 10)) / 10 AS BIGINT)"
-_HOLT_FOLD = f"""aggregate(
+_HOLT_FOLD = """aggregate(
   slice(arr, 2, size(arr) - 1),
   array(named_struct('l', element_at(arr, 1).x * 1000000,
                      'b', CAST(0 AS BIGINT))),
-  (acc, e) -> concat(acc, array(
-    named_struct('l', {_HOLT_L_NEW}, 'b', {_HOLT_B_NEW})))
-)"""
+  (acc, e) -> concat(acc, array(named_struct('l', {0}, 'b', {1})))
+)""".format(*_holt_step("e.x", "element_at(acc, -1).l", "element_at(acc, -1).b"))
 
 
 def q_events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:

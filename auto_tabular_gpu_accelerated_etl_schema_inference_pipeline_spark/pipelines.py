@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.dedup import minhash_near_dup_drop_ids
-from .operators.model import QuantileBinModel
+from .operators.quantile_bin import QuantileBinModel
 from .operators.text import STOPWORDS
 from .session import load_table, spread_small_scan
 

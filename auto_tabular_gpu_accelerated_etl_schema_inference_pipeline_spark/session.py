@@ -103,65 +103,88 @@ def configure_for_oracle(spark: SparkSession) -> SparkSession:
     return spark
 
 
-#: session-scoped DataFrame memo — expensive relations that several
-#: registry queries share (near-dup pairs, market-basket edges, LPA
-#: labels) are computed once per (SparkContext, key, sf_dir) and
-#: localCheckpoint-pinned. A checkpoint is only valid inside the
-#: context that produced it, hence the context id in the key; the
-#: pinned relations are all output-sized (pairs/labels ≪ input²). This
-#: is the production discipline at 100 TB: materialize a shared
-#: intermediate once per run, derive every consumer from the
-#: materialization instead of re-running the pipeline.
-_DF_MEMO: OrderedDict = OrderedDict()
+class ContextCache:
+    """Values that stay valid for the lifetime of one SparkContext,
+    keyed by the context's applicationId + startTime plus a caller key.
+    Not id(sparkContext): CPython recycles object addresses, so a
+    restarted context could otherwise be handed its predecessor's value
+    (a dead checkpoint, a fork of a stopped session).
 
-#: LRU bound for memo entries belonging to the LIVE context. Dead-
-#: context entries are always purged first; without this second bound a
-#: single long-lived context (e.g. many forked sessions hitting
-#: memoized lanes) would grow the dict unboundedly while holding
+    On every insert, entries of other (dead) contexts are purged first.
+    ``max_live`` additionally bounds the live context's entries, evicting
+    the least recently used one, for caches whose values pin memory."""
+
+    def __init__(self, max_live: int | None = None):
+        self.max_live = max_live
+        self._entries: OrderedDict = OrderedDict()
+
+    def get(self, spark: SparkSession, key: tuple, build):
+        """The value cached under ``key`` for ``spark``'s context,
+        calling ``build()`` to make it at most once while it stays
+        cached."""
+        sc = spark.sparkContext
+        ctx = (sc.applicationId, sc.startTime)
+        k = (*ctx, *key)
+        if k in self._entries:
+            self._entries.move_to_end(k)
+            return self._entries[k]
+        for old in [ok for ok in self._entries if ok[:2] != ctx]:
+            del self._entries[old]
+        value = build()
+        if self.max_live is not None:
+            while len(self._entries) >= self.max_live:
+                self._entries.popitem(last=False)
+        self._entries[k] = value
+        return value
+
+    def __contains__(self, k: tuple) -> bool:
+        return k in self._entries
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+#: LRU bound for session_memo entries of the live context: without it a
+#: single long-lived context (e.g. many forked sessions hitting memoized
+#: lanes) would grow the cache unboundedly while holding
 #: checkpoint-pinned blocks.
 _MEMO_MAX_LIVE = 64
+
+#: session-scoped DataFrame memo — expensive relations that several
+#: registry queries share (near-dup pairs, market-basket edges, LPA
+#: labels) are computed once per (session, key, sf_dir) and
+#: localCheckpoint-pinned. A checkpoint is only valid inside the
+#: context that produced it; the pinned relations are all output-sized
+#: (pairs/labels ≪ input²). This is the production discipline at
+#: 100 TB: materialize a shared intermediate once per run, derive every
+#: consumer from the materialization instead of re-running the pipeline.
+_DF_MEMO = ContextCache(max_live=_MEMO_MAX_LIVE)
 
 
 def session_memo(spark: SparkSession, key: str, sf_dir: str, build) -> DataFrame:
     """Return the checkpoint-pinned result of ``build()`` for this
-    (session, key, sf_dir), computing it at most once. Keyed by
-    applicationId + startTime — NOT id(sparkContext): CPython recycles
-    object addresses, so a restarted context could otherwise be handed
-    a dead checkpoint pinned by its predecessor — PLUS the JVM
-    SparkSession's sessionUUID: forked ``newSession()`` clones share
-    the context (same appId/startTime) but a DataFrame is bound to the
-    session that built it, so handing a fork another session's plan
-    would mix session state/confs. A fork therefore gets its own memo
-    slot (correct, merely un-shared). sessionUUID, not
-    ``hashCode()``: identity hashes are ~31-bit and reusable after GC,
-    so a later session could collide with a dead fork's entry; the
-    UUID is collision-free for the context's lifetime. Eviction is
-    two-tier: entries from other (dead) contexts go first, then LRU
-    within the live context once it exceeds _MEMO_MAX_LIVE entries —
-    dropping the reference lets the ContextCleaner reclaim the
-    checkpoint blocks, so one long-lived context (many forked
-    sessions) can't pin unbounded block-manager memory."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, spark._jsparkSession.sessionUUID(), key, sf_dir)
-    df = _DF_MEMO.get(k)
-    if df is None:
-        df = build().localCheckpoint()
-        if len(_DF_MEMO) >= _MEMO_MAX_LIVE:
-            for old in [ok for ok in _DF_MEMO if ok[:2] != ctx]:
-                del _DF_MEMO[old]
-            while len(_DF_MEMO) >= _MEMO_MAX_LIVE:  # LRU within live ctx
-                _DF_MEMO.popitem(last=False)
-        _DF_MEMO[k] = df
-    else:
-        _DF_MEMO.move_to_end(k)
-    return df
+    (session, key, sf_dir), computing it at most once. The key includes
+    the JVM SparkSession's sessionUUID: forked ``newSession()`` clones
+    share the context but a DataFrame is bound to the session that
+    built it, so handing a fork another session's plan would mix
+    session state/confs. A fork therefore gets its own memo slot
+    (correct, merely un-shared). sessionUUID, not ``hashCode()``:
+    identity hashes are ~31-bit and reusable after GC, so a later
+    session could collide with a dead fork's entry; the UUID is
+    collision-free for the context's lifetime. Evicting an entry drops
+    the reference, which lets the ContextCleaner reclaim its checkpoint
+    blocks."""
+    return _DF_MEMO.get(
+        spark,
+        (spark._jsparkSession.sessionUUID(), key, sf_dir),
+        lambda: build().localCheckpoint(),
+    )
 
 
-#: one cached newSession() fork per (context, purpose) — see
-#: forked_session. Purposes are module-static strings, so the cache is
-#: bounded by the number of forking LANES, not invocations.
-_FORK_CACHE: dict = {}
+#: one cached newSession() fork per (context, parent session, purpose) —
+#: see forked_session. Purposes are module-static strings, so the cache
+#: is bounded by the number of forking LANES, not invocations.
+_FORK_CACHE = ContextCache()
 
 
 #: runtime confs re-synced from the parent on EVERY forked_session call
@@ -194,15 +217,9 @@ def forked_session(spark: SparkSession, purpose: str) -> SparkSession:
     settings than every later one). Lanes must (re)apply their OWN
     confs and createOrReplaceTempView their views on every call: the
     fork is reused, not reset."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    key = (*ctx, spark._jsparkSession.sessionUUID(), purpose)
-    s = _FORK_CACHE.get(key)
-    if s is None:
-        for old in [k for k in _FORK_CACHE if k[:2] != ctx]:
-            del _FORK_CACHE[old]  # dead-context forks
-        s = spark.newSession()
-        _FORK_CACHE[key] = s
+    s = _FORK_CACHE.get(
+        spark, (spark._jsparkSession.sessionUUID(), purpose), spark.newSession
+    )
     for c in _FORK_SYNCED_CONFS:
         s.conf.set(c, spark.conf.get(c))
     return s
@@ -221,15 +238,14 @@ def pinned_shuffle_width(spark: SparkSession) -> int:
     return min(max(32, spark.sparkContext.defaultParallelism), 1024)
 
 
-#: memo for spread_small_scan's split-count probe: (applicationId,
-#: startTime, key, parallelism) -> bool(under-split). df.rdd forces full
-#: analysis + physical planning on the DRIVER per call (ADVICE r12), and
-#: the _docs()/_emb() loaders paid that on every query construction;
-#: the split count of a fixture table is stable for a context's
-#: lifetime, so one probe per (context, table, parallelism) suffices.
-#: Bounded: |tables| x |sf_dirs| live entries; dead-context entries are
-#: purged on insert (the session_memo discipline).
-_SPREAD_MEMO: dict = {}
+#: memo for spread_small_scan's split-count probe: (context, key,
+#: parallelism) -> bool(under-split). df.rdd forces full analysis +
+#: physical planning on the DRIVER per call (ADVICE r12), and the
+#: _docs()/_emb() loaders paid that on every query construction; the
+#: split count of a fixture table is stable for a context's lifetime,
+#: so one probe per (context, table, parallelism) suffices. Bounded:
+#: |tables| x |sf_dirs| live entries.
+_SPREAD_MEMO = ContextCache()
 
 
 def spread_small_scan(
@@ -255,42 +271,29 @@ def spread_small_scan(
     (true for the immutable fixture tables; a session that rewrites a
     table in place must not pass a key)."""
     par = spark.sparkContext.defaultParallelism
+
+    def under_split() -> bool:
+        return df.rdd.getNumPartitions() * 4 <= par
+
     if key is None:
-        if df.rdd.getNumPartitions() * 4 <= par:
-            return df.repartition(par)
-        return df
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, key, par)
-    under = _SPREAD_MEMO.get(k)
-    if under is None:
-        for old in [ok for ok in _SPREAD_MEMO if ok[:2] != ctx]:
-            del _SPREAD_MEMO[old]  # dead-context entries
-        under = df.rdd.getNumPartitions() * 4 <= par
-        _SPREAD_MEMO[k] = under
+        under = under_split()
+    else:
+        under = _SPREAD_MEMO.get(spark, (key, par), under_split)
     return df.repartition(par) if under else df
 
 
-#: memo for parquet_schema: (applicationId, startTime, path) -> schema.
-#: A footer read costs ~70 ms of driver time per call, and every
-#: streaming lane re-derived its source schema on every construction;
-#: fixture files are immutable for a context's lifetime. Dead-context
-#: entries purged on insert (the _SPREAD_MEMO discipline).
-_SCHEMA_MEMO: dict = {}
+#: memo for parquet_schema: (context, path) -> schema. A footer read
+#: costs ~70 ms of driver time per call, and every streaming lane
+#: re-derived its source schema on every construction; fixture files
+#: are immutable for a context's lifetime.
+_SCHEMA_MEMO = ContextCache()
 
 
 def parquet_schema(spark: SparkSession, path: str):
     """Memoized schema of a parquet file/dir (driver footer read)."""
-    sc = spark.sparkContext
-    ctx = (sc.applicationId, sc.startTime)
-    k = (*ctx, path)
-    schema = _SCHEMA_MEMO.get(k)
-    if schema is None:
-        for old in [ok for ok in _SCHEMA_MEMO if ok[:2] != ctx]:
-            del _SCHEMA_MEMO[old]
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[k] = schema
-    return schema
+    return _SCHEMA_MEMO.get(
+        spark, (path,), lambda: spark.read.parquet(path).schema
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

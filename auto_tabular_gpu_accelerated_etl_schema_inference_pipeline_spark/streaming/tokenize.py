@@ -2,8 +2,8 @@
 fit/transform pipeline (etl_benchmark.py:74,79; SURVEY.md §2.1 O5-O9)
 applied to a micro-batched stream.
 
-Topology: the FIT runs once on the batch table (the distributed exact
-percentile plan — KBs of driver state), the frozen boundaries are
+Topology: the FIT runs at most once per session on the batch table
+(the distributed exact percentile plan — KBs of driver state), the frozen boundaries are
 captured in the streaming plan, and every micro-batch runs the same
 map-only JVM Bucketizer projection — no state store, no stream-side
 shuffle, trivially scales to any ingest rate. This is the online-serving
@@ -16,8 +16,8 @@ quantile_bin_exact_boundaries, here with the exact (distributed) fit.
 
 from __future__ import annotations
 
-import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,42 +30,39 @@ from ..operators.quantile_bin import (
 from ..session import configure_for_oracle
 
 
-def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Bounded file stream over a fixture table (the events-stream
-    symlink-dir pattern, generalized)."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    from ..session import parquet_schema
-
-    schema = parquet_schema(spark, src)  # memoized footer read (r13)
-    tag = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"{table}_stream_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    link = os.path.join(stream_dir, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return spark.readStream.schema(schema).parquet(stream_dir)
-
-
 def q_streaming_tokenize_lineitem(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Tokenize the lineitem STREAM with the frozen boundary model,
     drain the append-mode sink.
 
-    The frozen model is SERVED from the persisted artifact the
-    saved-model lane builds (`persisted_exact_boundaries` — the exact
-    fit + 6dp rounding this lane previously recomputed in-query,
-    bit-identical): a streaming tokenizer deploying a model it refits
-    per query was the one place the train/serve split wasn't honored.
-    The fit cost lives in the fit lanes (quantile_bin_scalable,
-    quantile_bin_exact_boundaries); this entry now measures what the
-    production stream pays — artifact load + per-batch map-only
-    Bucketizer + sink drain."""
-    from ..operators.quantile_bin_queries import persisted_exact_boundaries
+    The frozen model is the session's exact lineitem model
+    (`exact_lineitem_boundaries` — the exact fit + 6dp rounding, fitted
+    at most once per session and shared with the quantile_bin serving
+    lanes): a streaming tokenizer deploying a model it refits per query
+    would not honour the train/serve split. The fit cost lives in the
+    fit lanes (quantile_bin_scalable, quantile_bin_exact_boundaries);
+    this entry measures what the production stream pays — per-batch
+    map-only Bucketizer + sink drain.
+
+    Everything the lane writes lives under one directory it creates: the
+    stream's source (a symlink to the fixture table) and checkpoint are
+    removed once the stream stops, and only the sink remains."""
+    from ..operators.quantile_bin_queries import exact_lineitem_boundaries
+    from ..session import parquet_schema
 
     configure_for_oracle(spark)
-    bounds = persisted_exact_boundaries(spark, sf_dir)
-    stream = _table_stream(spark, sf_dir, "lineitem")
+    bounds = exact_lineitem_boundaries(spark, sf_dir)
+    # The data dir must outlive this call (the returned DataFrame reads
+    # it lazily); the source and the single-use checkpoint do not.
+    out_dir = tempfile.mkdtemp(prefix="stream_tokenize_out_")
+    src_dir = os.path.join(out_dir, "src")
+    data_dir = os.path.join(out_dir, "data")
+    ckpt_dir = os.path.join(out_dir, "ckpt")
+    src = os.path.abspath(os.path.join(sf_dir, "lineitem.parquet"))
+    os.makedirs(src_dir)
+    os.symlink(src, os.path.join(src_dir, "lineitem.parquet"))
+    stream = spark.readStream.schema(parquet_schema(spark, src)).parquet(src_dir)
     tokens = bucketize(stream, bounds, keep_cols=LINEITEM_KEYS)
     # Parquet file sink, not the memory sink (r13, guide §5 "the driver
     # should do almost no data work": the memory sink COLLECTED the
@@ -74,11 +71,6 @@ def q_streaming_tokenize_lineitem(
     # identical, value-verified by the oracle). This is also the
     # production topology the lane's docstring claims: a stream
     # tokenizer lands rows in a table, it does not collect them.
-    # The data dir must outlive this call (the returned DataFrame reads
-    # it lazily); the single-use checkpoint is removed after stop.
-    out_dir = tempfile.mkdtemp(prefix="stream_tokenize_out_")
-    data_dir = os.path.join(out_dir, "data")
-    ckpt_dir = os.path.join(out_dir, "ckpt")
     q = (
         tokens.writeStream.outputMode("append")
         .format("parquet")
@@ -90,9 +82,8 @@ def q_streaming_tokenize_lineitem(
         q.processAllAvailable()
     finally:
         q.stop()
-        import shutil
-
         shutil.rmtree(ckpt_dir, ignore_errors=True)
+        shutil.rmtree(src_dir, ignore_errors=True)
     return spark.read.parquet(data_dir)
 
 

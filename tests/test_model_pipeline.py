@@ -8,12 +8,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.envcheck import (  # noqa: E402
     engine_info,
 )
-from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.model import (  # noqa: E402
-    QuantileBinModel,
-)
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin import (  # noqa: E402
     LINEITEM_KEYS,
     LINEITEM_MEASURES,
+    QuantileBinModel,
 )
 from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (  # noqa: E402
     load_table,

@@ -414,58 +414,43 @@ def test_gpu_factory_branch_with_mocked_torch(monkeypatch):
     assert got[-1] == len(interior)
 
 
-def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir):
+def test_auto_tokenize_serve_mode_guards_partial_model(spark, sf_dir, monkeypatch):
     """Serve-mode contract (round-6 train/serve split): a boundaries
     model covering every continuous column is used verbatim (no refit);
-    a PARTIAL model is ignored and everything refits — serving a model
-    that silently covers half the columns would mix model vintages."""
+    a PARTIAL model raises — serving a model that silently covers half
+    the columns would mix model vintages."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
+        quantile_bin,
+    )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin_queries import (
-        persisted_exact_boundaries,
+        exact_lineitem_boundaries,
     )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
         auto_tokenize,
     )
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
-        load_table,
-    )
 
     df = load_table(spark, sf_dir, "lineitem")
-    full = persisted_exact_boundaries(spark, sf_dir)
-    served = auto_tokenize(spark, df, "lineitem", boundaries=full)
-    # fit knobs alongside a FULL model are ignored — that must warn
-    # loudly (the caller thinks they're steering a fit that never runs)
-    import warnings
+    full = exact_lineitem_boundaries(spark, sf_dir)
 
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        auto_tokenize(
-            spark, df, "lineitem", relative_error=0.0, boundary_round=6,
-            boundaries=full,
-        )
-    assert any("ignored" in str(w.message) for w in caught), caught
-    refit = auto_tokenize(
-        spark, df, "lineitem", relative_error=0.0, boundary_round=6,
-    )
-    assert served.columns == refit.columns
-    assert served.exceptAll(refit).count() == 0
-    assert refit.exceptAll(served).count() == 0
-    # partial model: drop one continuous column -> must refit (same
-    # values again, because the refit reproduces the exact boundaries)
+    def no_fit(*_a, **_k):
+        raise AssertionError("a served model must not be refitted")
+
+    monkeypatch.setattr(quantile_bin, "fit_quantile_boundaries", no_fit)
+    bins = [f"{c}_bin" for c in LINEITEM_MEASURES]
+    served = auto_tokenize(spark, df, "lineitem", boundaries=full).select(*bins)
+    want = bucketize(df, full).select(*bins)
+    assert served.exceptAll(want).count() == 0
+    assert want.exceptAll(served).count() == 0
     partial = {k: v for k, v in full.items() if k != "l_tax"}
-    refit2 = auto_tokenize(
-        spark, df, "lineitem", relative_error=0.0, boundary_round=6,
-        boundaries=partial,
-    )
-    assert refit2.exceptAll(refit).count() == 0
+    with pytest.raises(ValueError, match=r"does not cover .*l_tax"):
+        auto_tokenize(spark, df, "lineitem", boundaries=partial)
 
 
 def test_auto_tokenize_lane_rejects_partial_artifact(spark, sf_dir, monkeypatch):
     """The oracle-backed auto-tokenize lane must fail LOUDLY if the
-    persisted artifact stops covering every inferred-continuous column
-    (classifier/artifact drift) instead of silently falling back to the
-    sketch refit and diverging from its oracle."""
-    import pytest
-
+    session's exact model stops covering every inferred-continuous
+    column (classifier/model drift) instead of silently refitting and
+    diverging from its oracle."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
         quantile_bin_queries as qbq,
     )
@@ -473,44 +458,100 @@ def test_auto_tokenize_lane_rejects_partial_artifact(spark, sf_dir, monkeypatch)
         q_auto_tokenize_lineitem,
     )
 
-    full = qbq.persisted_exact_boundaries(spark, sf_dir)
+    full = qbq.exact_lineitem_boundaries(spark, sf_dir)
     partial = {k: v for k, v in full.items() if k != "l_tax"}
     monkeypatch.setattr(
-        qbq, "persisted_exact_boundaries", lambda *a, **k: partial
+        qbq, "exact_lineitem_boundaries", lambda *a, **k: partial
     )
     with pytest.raises(ValueError, match="does not cover"):
         q_auto_tokenize_lineitem(spark, sf_dir)
 
 
-def test_persisted_boundaries_precomputed_seed(spark, sf_dir, tmp_path,
-                                               monkeypatch):
-    """r13: q_quantile_bin_scalable seeds the persisted boundary
-    artifact with the fit it already paid for. Contract: (a) a model
-    seeded via ``precomputed`` is bit-identical to one built from
-    scratch; (b) ``precomputed`` is IGNORED when the model already
-    exists (it is a build-cost shortcut, never an override)."""
+def test_exact_model_lanes_fit_once_and_leave_no_files(spark, sf_dir, tmp_path, monkeypatch):
+    """The six lanes that use the exact lineitem model share one fit
+    per session, and nothing they write outlives them except a lane's
+    own sink (the streaming lane's parquet output): no model directory
+    or other file is left in the temp dir for a later run to find."""
     import tempfile
 
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
         quantile_bin_queries as qbq,
     )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.schema_infer import (
+        q_auto_tokenize_lineitem,
+    )
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.session import (
-        load_table,
+        ContextCache,
+    )
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.streaming.tokenize import (
+        q_streaming_tokenize_lineitem,
     )
 
-    built = qbq.persisted_exact_boundaries(spark, sf_dir)  # real artifact
-    fit = qbq._exact_rounded_boundaries(load_table(spark, sf_dir, "lineitem"))
-    assert fit == built  # the seed invariant the scalable lane relies on
+    fits = []
+    fit = qbq._exact_rounded_boundaries
 
-    # fresh model namespace: same fixture, empty /tmp
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    seeded = qbq.persisted_exact_boundaries(spark, sf_dir, precomputed=fit)
-    assert seeded == built
-    # model now exists — a bogus precomputed must NOT override it
-    again = qbq.persisted_exact_boundaries(
-        spark, sf_dir, precomputed={"bogus": [1.0]}
+    def counting_fit(df):
+        fits.append(1)
+        return fit(df)
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(qbq, "_EXACT_MODEL", ContextCache())
+    monkeypatch.setattr(qbq, "_exact_rounded_boundaries", counting_fit)
+    for lane in (
+        qbq.q_quantile_bin_scalable,
+        qbq.q_quantile_bin_saved_model,
+        qbq.q_quantile_bin_pandas_udf,
+        qbq.q_quantile_bin_map_in_arrow,
+        q_auto_tokenize_lineitem,
+        q_streaming_tokenize_lineitem,
+    ):
+        assert lane(spark, sf_dir).count() > 0, lane.__name__
+    assert len(fits) == 1
+    left = [
+        os.path.relpath(os.path.join(d, f), tmp_path)
+        for d, _, files in os.walk(tmp_path)
+        for f in files
+    ]
+    assert left, "the streaming lane's sink is missing"
+    for rel in left:
+        top, sub = rel.split(os.sep)[:2]
+        assert top.startswith("stream_tokenize_out_") and sub == "data", rel
+
+
+def test_model_json_roundtrip_is_bit_exact(tmp_path):
+    """QuantileBinModel's JSON keeps every double bit for bit, including
+    the values a decimal text format can lose: -0.0, ±inf, a subnormal
+    and a double that needs 17 significant digits."""
+    import struct
+
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin import (
+        QuantileBinModel,
     )
-    assert again == built
+
+    vals = [float("-inf"), -0.0, 5e-324, 0.1 + 0.2, 1.7976931348623157e308, float("inf")]
+    model = QuantileBinModel(bins=5, boundaries={"x": vals}, relative_error=0.0)
+    path = str(tmp_path / "model.json")
+    model.save(path)
+    loaded = QuantileBinModel.load(path)
+    assert [struct.pack(">d", v) for v in loaded.boundaries["x"]] == [
+        struct.pack(">d", v) for v in vals
+    ]
+    assert (loaded.bins, loaded.relative_error) == (5, 0.0)
+
+
+def test_exact_fit_unpersists_histogram_on_all_null_column(spark):
+    """The exact distributed fit persists its value histogram; when it
+    rejects an all-null column it must still release that cache."""
+    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators.quantile_bin import (
+        fit_quantile_boundaries_exact_distributed,
+    )
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    df = spark.createDataFrame([(1.0, None), (2.0, None)], "a double, b double")
+    with pytest.raises(ValueError, match="all-null"):
+        fit_quantile_boundaries_exact_distributed(df, ["a", "b"], bins=4)
+    assert cache.isEmpty()
 
 
 def test_bucketize_matches_searchsorted_on_edge_values(spark):
@@ -558,28 +599,3 @@ def test_bucketize_py4j_commands_do_not_grow_with_boundaries(spark, count_py4j_c
     _, n11 = count_py4j_commands(bucketize, df, bounds(11))
     assert n101 <= 300, n101
     assert n11 == n101, (n11, n101)
-
-
-def test_scalable_lane_survives_model_seed_failure(spark, sf_dir, monkeypatch, caplog):
-    """Seeding the persisted boundary model is a side effect of
-    q_quantile_bin_scalable, not its subject: when the seed raises, the
-    lane logs a warning and still returns its oracle-equal result."""
-    import logging
-
-    from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark.operators import (
-        quantile_bin_queries as qbq,
-    )
-    from tests.oracle_harness import compare, duckdb_conn
-
-    def seed_fails(*_a, **_k):
-        raise OSError("No space left on device")
-
-    monkeypatch.setattr(qbq, "persisted_exact_boundaries", seed_fails)
-    with caplog.at_level(logging.WARNING, logger=qbq.__name__):
-        df = qbq.q_quantile_bin_scalable(spark, sf_dir)
-    assert "seeding the persisted boundary model failed" in caplog.text
-    con = duckdb_conn(sf_dir)
-    try:
-        compare(df, con, qbq.ORACLES["quantile_bin_scalable"], "quantile_bin_scalable")
-    finally:
-        con.close()

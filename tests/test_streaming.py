@@ -250,8 +250,7 @@ def test_session_memo_bounds_live_context_entries(spark, monkeypatch):
     memoized."""
     from auto_tabular_gpu_accelerated_etl_schema_inference_pipeline_spark import session as sess
 
-    monkeypatch.setattr(sess, "_MEMO_MAX_LIVE", 6)
-    monkeypatch.setattr(sess, "_DF_MEMO", type(sess._DF_MEMO)())
+    monkeypatch.setattr(sess, "_DF_MEMO", sess.ContextCache(max_live=6))
     builds = {"n": 0}
 
     def make(i):
